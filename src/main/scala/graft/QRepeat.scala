@@ -32,12 +32,13 @@ object QRepeat {
       (if (failed.isEmpty) "" else s" (FAILED: ${failed.mkString(", ")})"))
     names.foreach { name =>
       // attempt 1 decomposed: builder (may run eager memoized artifact
-      // work) / analysis+optimization+physical planning / first execution
-      // (codegen compile + run). Later attempts re-plan the same tree but
-      // hit the codegen cache and any plan-canonical caches — the spread
-      // between exec1 and min isolates what first-pass bench entries pay.
+      // work; build_jobs counts the Spark jobs it launched) / analysis+
+      // optimization+physical planning / first execution (codegen compile
+      // + run). Later attempts re-plan the same tree but hit the codegen
+      // cache and any plan-canonical caches — the spread between exec1 and
+      // min isolates what first-pass bench entries pay.
       val b0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val (df, buildJobs) = JobCount(spark)(SparkEntry.queries(name)(spark, sfDir))
       val b1 = System.nanoTime()
       df.queryExecution.executedPlan
       val p1 = System.nanoTime()
@@ -51,7 +52,8 @@ object QRepeat {
       val sorted = ts.sorted
       println(f"QREPEAT $name%-28s min ${sorted.head}%6.2f  " +
         f"med ${sorted(n / 2)}%6.2f  all ${ts.map(t => f"$t%.2f").mkString(" ")}" +
-        f"  [build ${(b1 - b0) / 1e9}%.2f plan ${(p1 - b1) / 1e9}%.2f " +
+        f"  [build ${(b1 - b0) / 1e9}%.2f build_jobs $buildJobs " +
+        f"plan ${(p1 - b1) / 1e9}%.2f " +
         f"exec1 ${(e1 - p1) / 1e9}%.2f]")
     }
     spark.stop()

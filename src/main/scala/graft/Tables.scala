@@ -18,8 +18,21 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Inferred schema per (session, table path). Spark infers a parquet
+    * schema by reading file footers in a job of its own, and the builders
+    * call [[t]] on every invocation, so an unmemoized read would launch
+    * that job on every build. The tables are immutable inputs for a
+    * session's lifetime; the memo keeps the first inference and every
+    * later read passes it via `.schema(...)`. The file listing still runs
+    * on each call, but no job does. */
+  private val schemas = new SessionMemo[String, StructType]
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read
+      .schema(schemas.computeIfAbsent(spark, path, p => spark.read.parquet(p).schema))
+      .parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

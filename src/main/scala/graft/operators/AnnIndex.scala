@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PERSISTED ANN INDEX STATE — IVF centroids and PQ codebooks as governed
@@ -41,10 +41,14 @@ private[graft] object AnnIndex {
   private[graft] val trainCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private val memo = new graft.SessionMemo[(String, String), DataFrame]
+  private val collected = new graft.SessionMemo[(String, String), Array[Row]]
 
-  /** Spec seam: drop this session's cached loads — the in-memory state
-    * an engine restart has (catalog tables on disk, nothing in memory). */
-  private[graft] def dropSessionMemo(s: SparkSession): Unit = memo.evict(s)
+  /** Spec seam: drop this session's cached loads and collected models —
+    * the in-memory state an engine restart has (catalog tables on disk,
+    * nothing in memory). */
+  private[graft] def dropSessionMemo(s: SparkSession): Unit = {
+    memo.evict(s); collected.evict(s)
+  }
 
   /** Corpus snapshot signature: SHA-256 over the sorted
     * (name, length, mtime) listing of the embeddings corpus under `d`. */
@@ -106,4 +110,12 @@ private[graft] object AnnIndex {
             "current corpus.")
       t.filter(col("k1") >= 0L)
     })
+
+  /** [[loadOrBuild]]'s model rows collected to the driver once per
+    * session — for models that are bounded by construction (the PQ
+    * codebooks: M × K rows) and that query builders read on every call,
+    * so a warm build launches no collect job. */
+  def loadRows(s: SparkSession, d: String, name: String)(
+      build: () => DataFrame): Array[Row] =
+    collected.computeIfAbsent(s, (d, name), _ => loadOrBuild(s, d, name)(build).collect())
 }

@@ -1269,7 +1269,9 @@ private[sources] class JsonlRowLevelOperation(
   /** `_file` rides along so Spark builds REAL ReplaceData projections
     * (data + metadata) — the writer then receives rows projected to the
     * write schema — and so the runtime group filter narrows the scan by
-    * file identity instead of row identity. */
+    * file identity: the rewrite scan advertises `_file` as its only
+    * runtime filter attribute, so only files holding a matched row are
+    * read and swapped. */
   override def requiredMetadataAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     Array(org.apache.spark.sql.connector.expressions.Expressions
@@ -2122,17 +2124,17 @@ private[sources] class JsonlScan(
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    val statCols = stats.values.flatMap(_.cols.keys).toSet
-      // Spark resolves these against the scan OUTPUT — only advertise
-      // stats fields that survived column pruning
-      .intersect(required.fields.map(_.name).toSet)
-    // _file identifies a row's group exactly — the attribute the COW
-    // rewrites' runtime group filters narrow on
-    val withFile =
-      if (required.fields.exists(_.name == JsonlV2.FileCol))
-        statCols + JsonlV2.FileCol
-      else statCols
-    withFile.toArray
+    // the copy-on-write rewrite scan (the one reporting its planned files)
+    // advertises _file ALONE: Spark builds its runtime group filter over
+    // every advertised attribute, and a multi-column
+    // `named_struct(...) IN (subquery)` never translates to a source
+    // filter, while `_file IN (subquery)` does and prunes by file identity
+    val names =
+      if (onPlanned.isDefined) Set(JsonlV2.FileCol)
+      else stats.values.flatMap(_.cols.keys).toSet + JsonlV2.FileCol
+    // Spark resolves these against the scan OUTPUT — only advertise
+    // fields that survived column pruning
+    names.intersect(required.fields.map(_.name).toSet).toArray
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
   }
 
@@ -2151,16 +2153,24 @@ private[sources] class JsonlScan(
     case _ => true
   }
 
-  private def keptFiles = {
-    val all = pushed ++ pruneOnly ++ runtime
+  private def keptBy(filters: Array[Filter]) = {
     val (fileFs, dataFs) =
-      all.partition(_.references.toSeq == Seq(JsonlV2.FileCol))
+      filters.partition(_.references.toSeq == Seq(JsonlV2.FileCol))
     files.filter { case (f, _) =>
       val name = f.substring(f.lastIndexOf('/') + 1)
       fileFs.forall(fileIdentityHit(f, _)) &&
         stats.get(name).forall(JsonlV2.mayMatch(dataFs, _))
     }
   }
+
+  private def keptFiles = keptBy(pushed ++ pruneOnly ++ runtime)
+
+  /** The files kept BEFORE runtime filtering. The key-grouping report is
+    * derived from these: Spark fixes the partition key columns at
+    * planning and only lets a runtime filter drop key values, so a file
+    * subset must not change which columns the keys are made of (on fewer
+    * files more columns can look constant). */
+  private def plannedFiles = keptBy(pushed ++ pruneOnly)
 
   override def readSchema(): StructType = required
 
@@ -2181,12 +2191,12 @@ private[sources] class JsonlScan(
     new JsonlMicroBatchStream(path, full, required, pushed, splitSize)
   }
 
-  /** The projected long/string columns EVERY kept file is single-valued
+  /** The projected long/string columns EVERY planned file is single-valued
     * on per its sidecar (zero nulls, min == max) — the columns a
     * `partitionBy` write routed. Empty when any file lacks stats: the
     * grouping claim must hold for every row or not be made. */
   private def constantCols: Seq[String] = {
-    val kept = keptFiles
+    val kept = plannedFiles
     def statsOf(f: String) = stats.get(f.substring(f.lastIndexOf('/') + 1))
     if (kept.isEmpty || kept.exists(k => statsOf(k._1).isEmpty)) Nil
     else required.fields.map(_.name).filter { c =>
@@ -2208,7 +2218,7 @@ private[sources] class JsonlScan(
   private def routeKeys: Option[Map[String, Seq[Any]]] = {
     if (routes.isEmpty) return None
     if (!routes.forall(r => required.fields.exists(_.name == r.col))) return None
-    val kept = keptFiles
+    val kept = plannedFiles
     if (kept.isEmpty) return None
     val entries = kept.map { case (f, _) =>
       val name = f.substring(f.lastIndexOf('/') + 1)
@@ -2270,7 +2280,7 @@ private[sources] class JsonlScan(
         if (cols.isEmpty)
           new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
         else {
-          val nKeys = keptFiles.map(k => keyOf(k._1, cols)).distinct.size
+          val nKeys = plannedFiles.map(k => keyOf(k._1, cols)).distinct.size
           new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
             cols.map(c => org.apache.spark.sql.connector.expressions.Expressions
               .identity(c): org.apache.spark.sql.connector.expressions.Expression)
@@ -2334,10 +2344,12 @@ private[sources] class JsonlScan(
       val key = declared match {
         case Some(m) => keyRowOf(m(name))
         case None if cols.nonEmpty =>
-          new GenericInternalRow(keyOf(f, cols).map {
-            case s: String => UTF8String.fromString(s)
-            case l: Long   => java.lang.Long.valueOf(l)
-            case other     => other
+          new GenericInternalRow(cols.zip(keyOf(f, cols)).map {
+            case (_, s: String) => UTF8String.fromString(s)
+            case (c, l: Long) if full(c).dataType == IntegerType =>
+              java.lang.Integer.valueOf(l.toInt)
+            case (_, l: Long)   => java.lang.Long.valueOf(l)
+            case (_, other)     => other
           }.toArray[Any])
         case None => null
       }
@@ -2659,7 +2671,7 @@ private[graft] class JsonlReaderFactory(
   }
 
   /** Columnar is offered exactly when every projected column has a
-    * vector writer (the four supported data types plus the constant
+    * vector writer (the five supported data types plus the constant
     * metadata columns) — BatchScanExec requires an all-or-nothing
     * answer across partitions, and ours is partition-independent.
     * Zero-column projections (bare count scans) stay on the row path:
@@ -2670,8 +2682,8 @@ private[graft] class JsonlReaderFactory(
       f.name == JsonlV2.FileCol || f.name == JsonlV2.PosCol ||
         f.name == JsonlV2.ChangeCol ||
         (f.dataType match {
-          case LongType | DoubleType | BooleanType | StringType => true
-          case _                                                => false
+          case LongType | IntegerType | DoubleType | BooleanType | StringType => true
+          case _                                                              => false
         })
     }
 
@@ -2722,14 +2734,16 @@ private[sources] abstract class JsonlLineReaderBase(
     * materialization so a pushed predicate and the row it admits can
     * never disagree on a type-mismatched line ({"s":123} under a string
     * schema IS the string "123"; {"n":"5"} under a long schema IS null).
-    * Returns Long / Double / Boolean / String (raw JVM values; callers
-    * wrap strings in UTF8String at the row boundary). */
+    * Returns Long / Integer / Double / Boolean / String (raw JVM values;
+    * callers wrap strings in UTF8String at the row boundary). */
   protected def coerce(tree: com.fasterxml.jackson.databind.JsonNode,
       name: String, dt: DataType): Any = {
     val n = tree.get(name)
     if (n == null || n.isNull) null
     else dt match {
       case LongType    => if (n.isNumber) java.lang.Long.valueOf(n.longValue) else null
+      case IntegerType =>
+        if (n.isNumber && n.canConvertToInt) java.lang.Integer.valueOf(n.intValue) else null
       case DoubleType  => if (n.isNumber) java.lang.Double.valueOf(n.doubleValue) else null
       case BooleanType => if (n.isBoolean) java.lang.Boolean.valueOf(n.booleanValue) else null
       case StringType  => if (n.isTextual) n.textValue else n.toString
@@ -2898,6 +2912,7 @@ private[sources] class JsonlColumnarPartitionReader(
           coerce(tree, name, dt) match {
             case null                   => v.putNull(n)
             case l: java.lang.Long      => v.putLong(n, l.longValue)
+            case i: java.lang.Integer   => v.putInt(n, i.intValue)
             case d: java.lang.Double    => v.putDouble(n, d.doubleValue)
             case b: java.lang.Boolean   => v.putBoolean(n, b.booleanValue)
             case s: String =>

@@ -411,6 +411,71 @@ class CatalogSpec extends SparkSpec {
     assert(got === want, "MERGE upsert diverged from last-write-wins")
   }
 
+  test("MERGE INTO rewrites only the files its matched rows live in: the " +
+    "runtime group filter narrows the copy-on-write scan on _file, so " +
+    "untouched files keep their names") {
+    val cat = freshCat("mergeprune")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (doc_id BIGINT, lang STRING, n_chars BIGINT)")
+    val base = graft.Tables.documents(spark, d).filter(col("doc_id") < 300)
+      .select(col("doc_id"), col("lang"), col("n_chars"))
+    // three appends, three files: doc_id [0,100), [100,200), [200,300)
+    for (lo <- Seq(0, 100, 200))
+      base.filter(col("doc_id") >= lo && col("doc_id") < lo + 100).coalesce(1)
+        .writeTo(s"$cat.lake.t").append()
+    val dir = spark.conf.get(s"spark.sql.catalog.$cat.warehouse") + "/lake/t"
+    val before = dataFiles(dir).map(_.getName)
+    assert(before.size === 3)
+    val stats = JsonlV2.loadStats(dir)
+    val touched = before.filter(n =>
+      stats(n).cols("doc_id").lo.exists(_.asInstanceOf[Number].longValue < 100L))
+    assert(touched.size === 1)
+    // ten keys: five match rows of the first file, five are new
+    graft.Tables.documents(spark, d)
+      .filter(col("doc_id") < 5 || (col("doc_id") >= 300 && col("doc_id") < 305))
+      .select(col("doc_id"), col("lang"), (col("n_chars") * 2).as("n_chars"))
+      .createOrReplaceTempView("mergeprune_delta")
+    spark.sql(
+      s"""MERGE INTO $cat.lake.t t USING mergeprune_delta s ON t.doc_id = s.doc_id
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val after = dataFiles(dir).map(_.getName).toSet
+    assert(before.filterNot(touched.contains).toSet.subsetOf(after),
+      s"MERGE rewrote files holding no matched row: before $before, after $after")
+    assert(!after.contains(touched.head), "the matched rows' file was not rewritten")
+    val got = spark.table(s"$cat.lake.t").collect().map(_.toString).sorted.toSeq
+    val want = graft.Tables.documents(spark, d).filter(col("doc_id") < 305)
+      .select(col("doc_id"), col("lang"),
+        when(col("doc_id") < 5 || col("doc_id") >= 300, col("n_chars") * 2)
+          .otherwise(col("n_chars")).as("n_chars"))
+      .collect().map(_.toString).sorted.toSeq
+    assert(got === want, "MERGE upsert diverged from last-write-wins")
+  }
+
+  test("INT columns round-trip through the lake: INSERT, SELECT and MERGE " +
+    "read back the IntegerType values the writer emitted") {
+    val cat = freshCat("intcol")
+    spark.sql(s"CREATE NAMESPACE $cat.lake")
+    spark.sql(s"CREATE TABLE $cat.lake.t (k BIGINT, q INT, name STRING)")
+    spark.sql(s"INSERT INTO $cat.lake.t VALUES (1, 10, 'a'), (2, -3, 'b'), " +
+      "(3, NULL, 'c'), (4, 2147483647, 'd')")
+    val t = spark.table(s"$cat.lake.t")
+    assert(t.schema("q").dataType === IntegerType)
+    def rows = spark.sql(s"SELECT k, q, name FROM $cat.lake.t ORDER BY k")
+      .collect().map(r => (r.getLong(0), Option(r.get(1)), r.getString(2))).toSeq
+    assert(rows === Seq((1L, Some(10), "a"), (2L, Some(-3), "b"),
+      (3L, None, "c"), (4L, Some(Int.MaxValue), "d")))
+    assert(spark.sql(s"SELECT SUM(q) FROM $cat.lake.t WHERE q > 0")
+      .head().getLong(0) === 10L + Int.MaxValue)
+    spark.sql(s"""MERGE INTO $cat.lake.t t
+         |USING (SELECT 2L AS k, 7 AS q, 'b2' AS name
+         |       UNION ALL SELECT 5L, -8, 'e') s ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET *
+         |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(rows === Seq((1L, Some(10), "a"), (2L, Some(7), "b2"),
+      (3L, None, "c"), (4L, Some(Int.MaxValue), "d"), (5L, Some(-8), "e")))
+  }
+
   test("dynamic partition overwrite replaces EXACTLY the incoming " +
     "partitions: untouched langs keep their files, the overwritten lang " +
     "carries only the new rows") {
